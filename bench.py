@@ -360,7 +360,7 @@ def main() -> None:
 
     # operator suite heavy hitters over the driver-provided sf tables.
     # "[2x]"-suffixed legs time MERGED variant-tagged suite entries that run
-    # BOTH their variants in one call (wand+daat, plain+salted) — roughly
+    # BOTH their variants in one call (wand+exact, plain+salted) — roughly
     # double the single-variant work; the suffix keeps the JSON
     # self-explaining across rounds (VERDICT r04 "what's wrong" #2).
     timed("bm25_twostage_docs[2x]",

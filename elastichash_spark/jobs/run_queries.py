@@ -26,7 +26,7 @@ def main() -> None:
     ap.add_argument("--index", required=True)
     ap.add_argument("--queries", required=True)
     ap.add_argument(
-        "--strategy", default="wand", choices=["wand", "exact", "wand_daat"]
+        "--strategy", default="wand", choices=["wand", "exact"]
     )
     ap.add_argument("--output", default=None)
     ap.add_argument(

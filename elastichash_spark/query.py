@@ -32,7 +32,6 @@ scan, then shuffled once by shard so each doc's full term set is co-located
 
 from __future__ import annotations
 
-import heapq
 import os
 import re
 from collections.abc import Iterator
@@ -119,6 +118,20 @@ _SMALL_TERM = 1024
 # corpus-wide, es_query.7.x.json's bool filter clause)
 _ALLOW_TERM = -1
 _ALLOW_CHUNK = 1 << 16  # docIDs per sentinel row (512 KiB blobs)
+
+# mining path: sentinel termID carrying a (query, shard) work order — the
+# query's resolved (termID, idf) plan packed as int64+float64 bytes
+_QINFO_TERM = -2
+
+_STRATEGIES = ("wand", "exact")
+
+
+def _check_strategy(strategy: str) -> None:
+    """Validate ``strategy`` on the driver, before any Spark job: an unknown
+    name fails at the call, not inside a Python worker at collect time."""
+    if strategy not in _STRATEGIES:
+        raise ValueError(
+            f"unknown strategy {strategy!r}: expected one of {_STRATEGIES}")
 
 
 def _allow_member(allow: np.ndarray, doc: np.ndarray) -> np.ndarray:
@@ -702,160 +715,6 @@ def _rescore_lazy(terms: list[_BlockTerm], cand: np.ndarray, fetch,
     return scores
 
 
-class _TermCursor:
-    """Posting-stream cursor over one term's blocks within one shard.
-
-    Skipped blocks are never decoded (the stage-1 saving); a block is decoded
-    only when the cursor lands inside it.
-    """
-
-    __slots__ = ("term_id", "idf", "first", "last", "n", "bmax", "blobs",
-                 "ub", "bi", "pos", "doc", "tf", "dl", "cur")
-
-    def __init__(self, term_id, idf, first, last, n, bmax, blobs):
-        self.term_id = term_id
-        self.idf = idf
-        self.first = first
-        self.last = last
-        self.n = n
-        self.bmax = bmax
-        self.blobs = blobs
-        self.ub = float(bmax.max())  # shard-local term upper bound
-        self.bi = -1
-        self.pos = 0
-        self.doc = None
-        self.cur = -1
-        self._enter_block(0, -1)
-
-    def _enter_block(self, bi: int, target: int) -> None:
-        while bi < len(self.blobs) and self.last[bi] < target:
-            bi += 1  # skip whole blocks on metadata only — no decode
-        if bi >= len(self.blobs):
-            self.bi = len(self.blobs)
-            self.cur = _INF
-            return
-        if bi != self.bi:
-            self.bi = bi
-            self.doc, self.tf, self.dl = codec.decode_run(self.blobs[bi], int(self.n[bi]))
-        self.pos = int(np.searchsorted(self.doc, target)) if target > self.doc[0] else 0
-        if self.pos >= len(self.doc):  # target fell in a gap past block end
-            self._enter_block(self.bi + 1, target)
-        else:
-            self.cur = int(self.doc[self.pos])
-
-    def next_geq(self, target: int) -> int:
-        """Advance to the first docID >= target."""
-        if self.cur >= target:
-            return self.cur
-        if self.bi < len(self.blobs) and target <= self.last[self.bi]:
-            self.pos = int(np.searchsorted(self.doc, target, side="left"))
-            if self.pos < len(self.doc):
-                self.cur = int(self.doc[self.pos])
-                return self.cur
-            self._enter_block(self.bi + 1, target)
-        else:
-            self._enter_block(self.bi + 1 if self.bi >= 0 else 0, target)
-        return self.cur
-
-    def block_max(self) -> float:
-        """Upper bound of the CURRENT block (block-max WAND refinement)."""
-        return float(self.bmax[self.bi]) if self.bi < len(self.blobs) else 0.0
-
-    def contribution(self, avgdl: float) -> float:
-        """Exact stage-2 contribution at the current posting (float64)."""
-        tf = float(self.tf[self.pos])
-        dl = float(self.dl[self.pos])
-        # identical association order to scoring.tf_part_col for bitwise equality
-        return self.idf * (tf / (tf + scoring.K1 * ((1.0 - scoring.B) + scoring.B * (dl / avgdl))))
-
-
-def _push_topk(heap: list, k: int, score: float, doc: int) -> None:
-    item = (score, -doc)  # worst = lowest score, then largest docID
-    if len(heap) < k:
-        heapq.heappush(heap, item)
-    elif item > heap[0]:
-        heapq.heapreplace(heap, item)
-
-
-def _theta(heap: list, k: int) -> float:
-    return heap[0][0] if len(heap) == k else -1.0
-
-
-def _wand_shard(cursors: list[_TermCursor], k: int, avgdl: float,
-                msm: int = 1) -> list[tuple[float, int]]:
-    """Block-max WAND over one (query, shard). Cursors are in termID order;
-    scoring iterates them in that fixed order (float determinism).
-
-    ``msm``: a doc scores only if >= msm cursors align on it (the aligned
-    set is exactly the containing terms at the pivot); the heap — and thus
-    the threshold — only ever holds eligible docs, so WAND's bound argument
-    is unchanged."""
-    heap: list[tuple[float, int]] = []
-    while True:
-        order = sorted((c for c in cursors if c.cur != _INF), key=lambda c: c.cur)
-        if not order:
-            break
-        th = _theta(heap, k)
-        # pivot: shortest prefix whose UB sum could still beat the threshold
-        acc, pivot_i = 0.0, -1
-        for i, c in enumerate(order):
-            acc += c.ub
-            if acc >= th:
-                pivot_i = i
-                break
-        if pivot_i < 0:
-            break  # even all terms together cannot reach the threshold
-        pivot = order[pivot_i].cur
-        if order[0].cur == pivot:
-            aligned = [c for c in order if c.cur == pivot]
-            # stage-1 block-max check: sum of CURRENT block maxima; msm
-            # ineligibility (fewer aligned cursors than msm) skips the
-            # rescore the same way — either path just advances past pivot
-            ub_bm = sum(c.block_max() for c in aligned)
-            if (len(heap) == k and ub_bm < th) or len(aligned) < msm:
-                for c in aligned:
-                    c.next_geq(pivot + 1)
-                continue
-            # stage-2 exact rescore, accumulated in ascending termID order
-            s = 0.0
-            for c in cursors:
-                if c.cur == pivot:
-                    s += c.contribution(avgdl)
-            if s > 0.0:
-                _push_topk(heap, k, s, pivot)
-            for c in aligned:
-                c.next_geq(pivot + 1)
-        else:
-            # advance the highest-UB cursor strictly below the pivot docID
-            # (guaranteed progress: its cur moves to >= pivot > old cur)
-            below = [c for c in order[:pivot_i] if c.cur < pivot]
-            cand = max(below, key=lambda c: c.ub)
-            cand.next_geq(pivot)
-    return [(s, -negd) for s, negd in heap]
-
-
-def _single_term_topk(c: _TermCursor, k: int, avgdl: float) -> list[tuple[float, int]]:
-    """Impact-ordered fast path for 1-term queries: visit blocks in descending
-    block-max order and stop as soon as the next block cannot beat the
-    threshold (the analogue of the reference's weighted subcode reordering,
-    ``experiments/util.py:80-96`` — process most-informative first).
-    Vectorized: per visited block the contributions fold into the running
-    top-k via :func:`_topk_vec` — no per-posting Python loop."""
-    top: list[tuple[float, int]] = []
-    theta = -1.0
-    for bi in np.argsort(-c.bmax, kind="stable"):
-        if len(top) == k and c.bmax[bi] < theta:
-            break
-        doc, tf, dl = codec.decode_run(c.blobs[bi], int(c.n[bi]))
-        contribs = c.idf * scoring.tf_part_np(tf, dl, avgdl)
-        merged_s = np.concatenate([[s for s, _d in top], contribs])
-        merged_d = np.concatenate([[d for _s, d in top], doc]).astype(np.int64)
-        top = _topk_vec(merged_s, merged_d, k)
-        if len(top) == k:
-            theta = top[-1][0]
-    return top
-
-
 def _exact_shard(terms: list[_BlockTerm], k: int, msm: int = 1) -> list[tuple[float, int]]:
     """Brute-force stage-2-only scoring (the ``es-long`` method analogue):
     decode everything (cached across the batch), vectorized accumulate in
@@ -904,14 +763,23 @@ def _blob_views(tbl: pa.Table) -> list[memoryview]:
     return views
 
 
-def _make_kernel(qinfo: list[dict], avgdl: float, strategy: str,
-                 collect_stats: bool = False, safe_bounds: bool = False,
-                 small_cutoff: int = _SMALL_TERM, filtered: bool = False):
-    """mapInArrow kernel over postings rows sorted by (shard, termID, block_id).
+def _cell_kernel(avgdl: float, strategy: str, safe_bounds: bool,
+                 filtered: bool, small_cutoff: int,
+                 qinfo: list[dict] | None = None,
+                 collect_stats: bool = False):
+    """mapInArrow kernel shared by :func:`search` and :func:`search_mining`,
+    over postings rows sorted by ([bucket,] shard, termID, block_id). A
+    cell is one run of equal (bucket, shard): one doc shard, scored for one
+    batch of queries.
 
-    Emits per-(query, shard) top-k candidates; the global window merge picks
+    Emits per-(query, cell) top-k candidates; the global window merge picks
     the final top-k. Safe because per-shard thresholds only prune docs that
     lose within their own shard — a fortiori they lose globally.
+
+    The callers differ only in where the query plans come from: ``qinfo``
+    is ``search``'s driver-planned batch (:func:`plan_queries` dicts),
+    scored in every cell; ``None`` means ``search_mining``, whose cells
+    carry their bucket's plans as leading ``_QINFO_TERM`` rows.
 
     With ``collect_stats``, sentinel rows (qid < 0) carry the partition's
     summed pruning economics; ``search(with_stats=True)`` aggregates them.
@@ -939,90 +807,113 @@ def _make_kernel(qinfo: list[dict], avgdl: float, strategy: str,
             # (append.py; tf_part increasing in tf, decreasing in dl, so
             # tf_part(max_tf, min_dl) >= tf_part of any member posting).
             # idf multiplies in per term below.
-            bmax_part = scoring.tf_part_np(
+            bmax = scoring.tf_part_np(
                 tbl.column("max_tf").to_numpy(),
                 tbl.column("min_dl").to_numpy(),
                 avgdl,
             )
-            bmax = None
         else:
             bmax = tbl.column("max_impact").to_numpy()
         blobs = _blob_views(tbl)
         counter = {k: 0 for k in _STATS_QIDS} if collect_stats else None
         out_q, out_d, out_s = [], [], []
-        # iterate shard groups (rows pre-sorted by shard, termID, block_id)
-        for sh in np.unique(shard):
-            m = shard == sh
-            sh_term, sh_first, sh_last = term[m], first[m], last[m]
-            sh_n = n[m]
-            sh_bmax = bmax_part[m] if safe_bounds else bmax[m]
-            sh_idx = np.flatnonzero(m)
+        # rows arrive sorted, so cells, each cell's sentinel prefix
+        # (_QINFO_TERM = -2 < _ALLOW_TERM = -1 < every real termID) and its
+        # term groups are CONTIGUOUS RUNS: boundary detection instead of
+        # per-value mask scans (O(cells x rows) + O(terms x rows)), and
+        # per-cell term packs are built ONCE and shared by reference across
+        # the cell's queries — per-(query, term) setup is O(1) instead of
+        # O(blocks-of-term), the difference between the wall scaling with
+        # corpus size and scaling with touched blocks on hot terms
+        # (measured on the 26.9M-turn xxl tier, BENCH.md).
+        brk = shard[1:] != shard[:-1]
+        if "bucket" in tbl.column_names:
+            bucket = tbl.column("bucket").to_numpy()
+            brk |= bucket[1:] != bucket[:-1]
+        cell_starts = np.flatnonzero(np.r_[True, brk])
+        cell_ends = np.append(cell_starts[1:], shard.size)
+        for c0, c1 in zip(cell_starts, cell_ends):
+            c_term = term[c0:c1]
+            qn = int(np.searchsorted(c_term, _QINFO_TERM, side="right"))
+            an = int(np.searchsorted(c_term, _ALLOW_TERM, side="right"))
+            if qinfo is not None:
+                plans = qinfo
+            else:
+                # work order: qid in first_docID, k in last_docID, nt
+                # sorted termIDs (int64) then their idfs (float64) in blob
+                plans = []
+                for r in range(c0, c0 + qn):
+                    nt = int(n[r])
+                    tids = np.frombuffer(blobs[r][: 8 * nt], dtype=np.int64)
+                    idfs = np.frombuffer(blobs[r][8 * nt:], dtype=np.float64)
+                    plans.append({
+                        "qid": int(first[r]), "k": int(last[r]),
+                        "terms": [(t, w, 1.0) for t, w in
+                                  zip(tids.tolist(), idfs.tolist())],
+                    })
+                if not plans:
+                    continue  # no queries landed in this bucket
             allow = None
             if filtered:
-                # sentinel rows sort first (termID -1 < any real term) in
-                # block_id order; each chunk is sorted and chunks ascend, so
-                # concatenation yields the shard's sorted allow-set. A
-                # filtered shard with NO sentinel rows has no allowed docs.
-                arows = np.flatnonzero(sh_term == _ALLOW_TERM)
+                # allow-set chunks sort after the work orders and before
+                # every real term, in block_id order; each chunk is sorted
+                # and chunks ascend, so concatenation IS the shard's sorted
+                # allow-set. A filtered cell with no allow rows has no
+                # allowed docs.
                 allow = (
                     np.concatenate(
-                        [np.frombuffer(blobs[sh_idx[r]], dtype=np.int64)
-                         for r in arows]
+                        [np.frombuffer(blobs[r], dtype=np.int64)
+                         for r in range(c0 + qn, c0 + an)]
                     )
-                    if arows.size
+                    if an > qn
                     else np.empty(0, dtype=np.int64)
                 )
-            term_rows = {
-                int(t): np.flatnonzero(sh_term == t)
-                for t in np.unique(sh_term)
-                if int(t) != _ALLOW_TERM
-            }
+            packs: dict = {}  # termID -> (first, last, n, bmax, ub, blobs)
+            real = c_term[an:]
+            if real.size:
+                tstarts = np.flatnonzero(np.r_[True, real[1:] != real[:-1]])
+                tends = np.append(tstarts[1:], real.size)
+                for s0, s1 in zip(tstarts, tends):
+                    a0, a1 = c0 + an + int(s0), c0 + an + int(s1)
+                    tb = bmax[a0:a1]
+                    packs[int(real[s0])] = (
+                        first[a0:a1], last[a0:a1], n[a0:a1],
+                        tb, float(tb.max()), blobs[a0:a1],
+                    )
             decode_cache: dict = {}  # (termID, block) -> arrays, shared by queries
-            for q in qinfo:
-                args = []
-                for term_id, idf, boost in q["terms"]:  # ascending termID
-                    rows = term_rows.get(term_id)
-                    if rows is None:
+            scaled: dict = {}  # (termID, scale) -> scaled (bmax, ub)
+            for q in plans:
+                bts = []
+                for term_id, weight, boost in q["terms"]:  # ascending termID
+                    p = packs.get(term_id)
+                    if p is None:
                         continue
+                    fir, las, nn, tb, ub, bl = p
                     # stored max_impact bakes in build-time idf, so a query
                     # boost must scale the bounds too — otherwise boosted
                     # contributions exceed the block maxima and pruning
                     # silently turns lossy. safe_bounds rebuilds impact-free
-                    # bounds and multiplies the (already boosted) idf in.
-                    if safe_bounds:
-                        scl = idf
-                    elif boost != 1.0:
-                        scl = boost
-                    else:
-                        scl = 1.0
-                    tb = sh_bmax[rows] * scl if scl != 1.0 else sh_bmax[rows]
-                    args.append(
-                        (term_id, idf, sh_first[rows], sh_last[rows], sh_n[rows],
-                         tb, [blobs[sh_idx[r]] for r in rows], scl)
-                    )
+                    # bounds and multiplies the (already boosted) weight in.
+                    scl = weight if safe_bounds else boost
+                    if scl != 1.0:
+                        ent = scaled.get((term_id, scl))
+                        if ent is None:
+                            ent = scaled[(term_id, scl)] = (tb * scl, ub * scl)
+                        tb, ub = ent
+                    bts.append(_BlockTerm(
+                        term_id, weight, fir, las, nn, tb, bl, avgdl=avgdl,
+                        cache=decode_cache, allow=allow, scale=scl, ub=ub))
                 msm = q.get("msm", 1)
-                if not args or len(args) < msm:
+                if not bts or len(bts) < msm:
                     # a doc's full term set co-locates in its shard, so a
                     # shard holding postings for fewer than msm of the
                     # query's terms cannot contain an eligible doc
                     continue
                 if strategy == "wand":
-                    bts = [_BlockTerm(*a[:7], avgdl=avgdl, cache=decode_cache,
-                                      allow=allow, scale=a[7]) for a in args]
                     top = _bmw_shard(bts, q["k"], counter,
                                      small_cutoff=small_cutoff, msm=msm)
-                elif strategy == "exact":
-                    bts = [_BlockTerm(*a[:7], avgdl=avgdl, cache=decode_cache,
-                                      allow=allow, scale=a[7]) for a in args]
-                    top = _exact_shard(bts, q["k"], msm=msm)
-                elif strategy == "wand_daat":
-                    cursors = [_TermCursor(*a[:7]) for a in args]
-                    if len(cursors) == 1 and msm <= 1:
-                        top = _single_term_topk(cursors[0], q["k"], avgdl)
-                    else:
-                        top = _wand_shard(cursors, q["k"], avgdl, msm=msm)
                 else:
-                    raise ValueError(f"unknown strategy {strategy!r}")
+                    top = _exact_shard(bts, q["k"], msm=msm)
                 for s, d in top:
                     out_q.append(q["qid"])
                     out_d.append(d)
@@ -1508,7 +1399,11 @@ def _sloppy_pf(toks):
     L, S = F.col("L"), F.col("slop")
 
     def hit(st, e):
-        return (st["m"] < L - 1) & (e == F.element_at(F.col("phr"), st["m"] + 2))
+        # once the phrase is fully matched (m == L - 1) the read is one past
+        # phr: element_at would throw under ANSI mode unless And happened to
+        # skip its right side; try_element_at yields null, which is no hit
+        return (st["m"] < L - 1) & (
+            e == F.try_element_at(F.col("phr"), st["m"] + 2))
 
     def weight(i):
         inner = F.aggregate(
@@ -2737,10 +2632,9 @@ def search(
     end-to-end and is rank-identical per query.
 
     ``queries``: DataFrame(qid, text, k) or a list of (qid, text, k) tuples.
-    ``strategy``: 'wand' (vectorized block-max two-stage, default), 'exact'
-    (decode-everything rescore — the ``es-long`` analogue used for economics
-    comparisons), or 'wand_daat' (document-at-a-time cursor WAND — reference
-    implementation kept for cross-checking).
+    ``strategy``: 'wand' (vectorized block-max two-stage, default) or
+    'exact' (decode-everything rescore — the ``es-long`` analogue used for
+    economics comparisons); anything else raises ``ValueError`` at the call.
     Returns DataFrame(qid, rank, docID, score) under (score DESC, docID ASC);
     with ``with_stats`` (wand only), returns (DataFrame, stats dict) where
     stats carries the measured pruning economics (blocks_total /
@@ -2757,8 +2651,7 @@ def search(
     restricted to matching docs, scoring statistics (idf, avgdl) stay
     corpus-wide, and results are exact filtered top-k — pruning remains
     lossless over the filtered sub-corpus (disallowed docs are masked at the
-    decode boundary; block maxima stay valid upper bounds). Supported for
-    'wand' and 'exact'.
+    decode boundary; block maxima stay valid upper bounds).
 
     ``boosts``: optional {qid: {token: boost}} per-term score multipliers
     (ES ``term^boost``; see :func:`plan_queries` /
@@ -2802,13 +2695,9 @@ def search(
     """
     from .deletes import load_tombstones
 
+    _check_strategy(strategy)
     meta, _docs, terms_df, postings = load_index(spark, index_dir)
     tomb = load_tombstones(spark, index_dir)
-    if (doc_filter is not None or tomb is not None) and strategy == "wand_daat":
-        raise ValueError(
-            "doc_filter / tombstoned indexes are not supported with "
-            "strategy='wand_daat'; use 'wand' or 'exact'"
-        )
     if isinstance(queries, DataFrame):
         qlist = [(r["qid"], r["text"], r["k"]) for r in queries.select("qid", "text", "k").collect()]
     else:
@@ -2846,11 +2735,10 @@ def search(
         posts.repartition(4 * num_shards, "shard")
         .sortWithinPartitions("shard", "termID", "block_id")
         .mapInArrow(
-            _make_kernel(qinfo, float(meta["avgdl"]), strategy,
-                         collect_stats=with_stats,
+            _cell_kernel(float(meta["avgdl"]), strategy,
                          safe_bounds=bool(meta.get("appended")),
-                         small_cutoff=small_cutoff,
-                         filtered=masked),
+                         filtered=masked, small_cutoff=small_cutoff,
+                         qinfo=qinfo, collect_stats=with_stats),
             RESULT_SCHEMA,
         )
     )
@@ -3019,11 +2907,6 @@ def term_vectors(
     )
 
 
-# mining path: sentinel termID carrying a (query, shard) work order — the
-# query's resolved (termID, idf) plan packed as int64+float64 bytes
-_QINFO_TERM = -2
-
-
 def search_mining(
     spark: SparkSession,
     index_dir: str,
@@ -3050,8 +2933,8 @@ def search_mining(
        dictionary on ``term`` (absent tokens drop, contributing 0 — same
        as ``plan_queries``). One shuffle, queries-side-sized.
     2. bucket qids by hash into B = ceil(|Q| / queries_per_bucket)
-       buckets; pack each query's sorted (termID, idf) plan into ONE
-       binary sentinel row per (query, shard) — schema-compatible with
+       buckets; pack each query's sorted (termID, idf) plan and its k into
+       ONE binary sentinel row per (query, shard) — schema-compatible with
        postings rows (termID = -2 sorts before every real term). Sentinel
        traffic is O(|Q| * shards * terms/query * 16 B): the explicit price
        of the grid, linear in both factors, no driver round-trip.
@@ -3059,10 +2942,11 @@ def search_mining(
        (shuffle-hash join on termID) — postings amplification is bounded
        by B, not |Q|; queries_per_bucket trades that against task memory.
     4. repartition by (bucket, shard), sort within partitions by (bucket,
-       shard, termID, block_id), and run the per-shard kernels: each
-       (bucket, shard) cell scores its bucket's queries against its
-       shard's postings. Per-term block metadata + blob views are packed
-       ONCE per cell and shared by reference across the bucket's queries
+       shard, termID, block_id), and run the cell kernel ``search`` also
+       uses (:func:`_cell_kernel`): each (bucket, shard) cell scores its
+       bucket's queries against its shard's postings. Per-term block
+       metadata + blob views are packed ONCE per cell and shared by
+       reference across the bucket's queries
        (per-(query, term) setup is O(1), not O(blocks-of-term) — hot
        terms would otherwise cost per-query work linear in corpus size),
        and ONE block-decode cache is shared across the bucket's queries —
@@ -3085,6 +2969,7 @@ def search_mining(
     decode boundary exactly like the serving path. Rank-identical to
     ``search`` with the same filter/tombstones.
     """
+    _check_strategy(strategy)
     if k <= 0:
         return spark.createDataFrame(
             [], "qid long, rank int, docID long, score double")
@@ -3141,7 +3026,7 @@ def search_mining(
         F.lit(0).alias("block_id"),
         F.col("nt").alias("n"),
         F.col("qid").alias("first_docID"),
-        F.lit(0).cast("long").alias("last_docID"),
+        F.lit(int(k)).cast("long").alias("last_docID"),
         F.lit(0.0).alias("max_impact"),
         F.lit(0).alias("max_tf"),
         F.lit(0).alias("min_dl"),
@@ -3171,132 +3056,14 @@ def search_mining(
     grid = n_buckets * shard_range
     n_parts = int(max(4 * num_shards, min(grid, 4096)))
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .session import disable_thp
-
-        disable_thp()
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        tbl = pa.Table.from_batches(batch_list)
-        if tbl.num_rows == 0:
-            return
-        bucket = tbl.column("bucket").to_numpy()
-        shard = tbl.column("shard").to_numpy()
-        term = tbl.column("termID").to_numpy()
-        first = tbl.column("first_docID").to_numpy()
-        last = tbl.column("last_docID").to_numpy()
-        n = tbl.column("n").to_numpy()
-        if safe_bounds:
-            bmax_part = scoring.tf_part_np(
-                tbl.column("max_tf").to_numpy(),
-                tbl.column("min_dl").to_numpy(), avgdl)
-            bmax = None
-        else:
-            bmax = tbl.column("max_impact").to_numpy()
-        blobs = _blob_views(tbl)
-        out_q, out_d, out_s = [], [], []
-        # rows arrive sorted by (bucket, shard, termID, block_id) — the
-        # sortWithinPartitions below mapInArrow — so cells, and each cell's
-        # sentinel prefix (_QINFO_TERM = -2 < every real termID) and term
-        # groups, are CONTIGUOUS RUNS. Boundary detection replaces the old
-        # per-value mask scans (O(cells x rows) + O(terms x rows)), and
-        # per-cell term packs are built ONCE and shared by reference across
-        # the bucket's queries: per-(query, term) setup is O(1) instead of
-        # O(blocks-of-term) — the difference between the mining wall
-        # scaling with corpus size and scaling with touched blocks on hot
-        # terms (measured on the 26.9M-turn xxl tier, BENCH.md).
-        key = bucket.astype(np.int64) * (shard_range + 1) + shard.astype(np.int64)
-        cell_starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
-        cell_ends = np.append(cell_starts[1:], key.size)
-        for c0, c1 in zip(cell_starts, cell_ends):
-            sh_term = term[c0:c1]
-            sh_first, sh_last, sh_n = first[c0:c1], last[c0:c1], n[c0:c1]
-            sh_bmax = (bmax_part if safe_bounds else bmax)[c0:c1]
-            # sentinels sort first: count of termID <= _QINFO_TERM
-            qn = int(np.searchsorted(sh_term, _QINFO_TERM, side="right"))
-            if qn == 0:
-                continue  # no queries landed in this bucket
-            # allow-set chunks (termID = _ALLOW_TERM = -1) sort between
-            # the work orders (-2) and every real term; rows are in
-            # block_id order, each chunk sorted and chunks ascending, so
-            # concatenation IS the shard's sorted allow-set. A filtered
-            # cell with no allow rows has no allowed docs in its shard.
-            an = int(np.searchsorted(sh_term, _ALLOW_TERM, side="right"))
-            allow = None
-            if filtered:
-                allow = (
-                    np.concatenate(
-                        [np.frombuffer(blobs[c0 + r], dtype=np.int64)
-                         for r in range(qn, an)]
-                    )
-                    if an > qn
-                    else np.empty(0, dtype=np.int64)
-                )
-            real = sh_term[an:]
-            packs: dict = {}  # termID -> (first, last, n, bmax, ub, blobs)
-            if real.size:
-                tstarts = np.flatnonzero(np.r_[True, real[1:] != real[:-1]])
-                tends = np.append(tstarts[1:], real.size)
-                for s0, s1 in zip(tstarts, tends):
-                    a0, a1 = an + int(s0), an + int(s1)
-                    tb = sh_bmax[a0:a1]
-                    packs[int(real[s0])] = (
-                        sh_first[a0:a1], sh_last[a0:a1], sh_n[a0:a1],
-                        tb, float(tb.max()), blobs[c0 + a0: c0 + a1],
-                    )
-            decode_cache: dict = {}  # shared across the bucket's queries
-            scaled: dict = {}  # safe_bounds: termID -> idf-scaled (tb, ub),
-            # computed once per cell (idf is a dictionary constant per term,
-            # identical for every query referencing it)
-            for r in range(qn):
-                qid = int(sh_first[r])
-                nt = int(sh_n[r])
-                buf = blobs[c0 + r]
-                tids = np.frombuffer(buf[: 8 * nt], dtype=np.int64)
-                idfs = np.frombuffer(buf[8 * nt:], dtype=np.float64)
-                bts = []
-                for term_id, idf in zip(tids, idfs):
-                    p = packs.get(int(term_id))
-                    if p is None:
-                        continue
-                    fir, las, nn, tb, ubv, bl = p
-                    if safe_bounds:
-                        ent = scaled.get(int(term_id))
-                        if ent is None:
-                            ent = (tb * float(idf), ubv * float(idf))
-                            scaled[int(term_id)] = ent
-                        tb, ubv = ent
-                        scl = float(idf)
-                    else:
-                        scl = 1.0
-                    bts.append(_BlockTerm(
-                        int(term_id), float(idf), fir, las, nn, tb, bl,
-                        avgdl=avgdl, cache=decode_cache, scale=scl, ub=ubv,
-                        allow=allow))
-                if not bts:
-                    continue
-                if strategy == "wand":
-                    top = _bmw_shard(bts, k, None, small_cutoff=small_cutoff)
-                elif strategy == "exact":
-                    top = _exact_shard(bts, k)
-                else:
-                    raise ValueError(
-                        f"search_mining: unknown strategy {strategy!r}")
-                for s, d in top:
-                    out_q.append(qid)
-                    out_d.append(d)
-                    out_s.append(s)
-        yield pa.RecordBatch.from_pydict(
-            {"qid": out_q, "docID": out_d, "score": out_s},
-            schema=pa.schema([("qid", pa.int64()), ("docID", pa.int64()),
-                              ("score", pa.float64())]),
-        )
-
     cand = (
         work.repartition(n_parts, "bucket", "shard")
         .sortWithinPartitions("bucket", "shard", "termID", "block_id")
-        .mapInArrow(kernel, RESULT_SCHEMA)
+        .mapInArrow(
+            _cell_kernel(avgdl, strategy, safe_bounds=safe_bounds,
+                         filtered=filtered, small_cutoff=small_cutoff),
+            RESULT_SCHEMA,
+        )
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docID"))
     return (

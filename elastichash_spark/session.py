@@ -83,6 +83,17 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
 
 
+def _default_driver_mem() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: 24g, capped at 60% of
+    the host's physical memory so a small host never gets a heap larger
+    than its RAM."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf: keep 24g
+        return "24g"
+    return f"{min(24 << 10, int(phys * 0.6) >> 20)}m"
+
+
 def get_spark(
     app_name: str = "elastichash_spark",
     cores: int | None = None,
@@ -115,8 +126,9 @@ def get_spark(
         # batch-throughput JVM: ParallelGC beat G1 ~1.4x on the write-heavy
         # stages (G1's concurrent cycles fight the task threads for cores),
         # and an ample heap keeps the allocation-rate-scales-with-cores GC
-        # pressure off the scaling curve
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # pressure off the scaling curve (capped by the host's RAM)
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")

@@ -1220,18 +1220,17 @@ def _bm25_engine(spark: SparkSession, sf_dir: str, strategy: str,
 
 def q_bm25_twostage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full engine, BOTH kernel strategies in one variant-tagged entry:
-    resumable index build + block-max WAND + exact rescore (`wand`), and
-    the document-at-a-time cursor strategy (`wand_daat`, the
-    reference-shaped implementation kept for cross-checking, including the
-    impact-ordered single-term fast path). Both must reproduce the same
-    brute-force BM25 oracle, each under its own variant tag — driver-level
-    evidence for both strategies in one certification slot."""
+    resumable index build + block-max WAND prefilter + exact rescore
+    (`wand`), and the decode-everything rescore (`exact`, the ``es-long``
+    analogue). Both run the one shard-cell kernel and must reproduce the
+    same brute-force BM25 oracle, each under its own variant tag —
+    driver-level evidence for both strategies in one certification slot."""
     return (
         _bm25_engine(spark, sf_dir, "wand")
         .select(F.lit("wand").alias("variant"), "*")
         .unionByName(
-            _bm25_engine(spark, sf_dir, "wand_daat")
-            .select(F.lit("wand_daat").alias("variant"), "*"))
+            _bm25_engine(spark, sf_dir, "exact")
+            .select(F.lit("exact").alias("variant"), "*"))
     )
 
 
@@ -3332,7 +3331,7 @@ SELECT 'corpus', '', 'avgdl', round(avgdl, 6) FROM st
     # merged two-strategy entry: the same ranking oracle under each tag
     sql["bm25_twostage"] = (
         f"SELECT 'wand' AS variant, * FROM ({_BM25_SQL})\n"
-        f"UNION ALL\nSELECT 'wand_daat' AS variant, * FROM ({_BM25_SQL})"
+        f"UNION ALL\nSELECT 'exact' AS variant, * FROM ({_BM25_SQL})"
     )
     sql["bm25_filtered"] = _BM25_FILTERED_SQL
     sql["bm25_boosted"] = _BM25_BOOSTED_SQL
@@ -4300,23 +4299,72 @@ def queries():
     in SUITE_CERT.json; `scripts/check_suite.py --rotation` asserts no
     entry's last driver-green round is more than one round old)."""
     return {
-        # ===== r05 WINDOW (first 50 keys; the driver records these) =====
-        # --- the 6 never-driver-certified entries (pending since r04,
-        # contiguous at the old below-boundary head — landed first here
-        # exactly as the rotation contract promised) ---
+        # ===== r06 WINDOW (first 50 keys; the driver records these) =====
+        # --- the 41 entries last certified r04, owed this round; the
+        # first three changed since (r05 merges, the r06 strategy swap) ---
+        "bm25_twostage": q_bm25_twostage,
+        # merged: within + cross duplicated-n-gram variants in one slot
+        "dup_ngrams": q_dup_ngrams,
+        # merged: appended + compacted lifecycle in one slot
+        "bm25_appended": q_bm25_appended,
+        "bm25_querystring": q_bm25_querystring,
+        "bm25_must_not": q_bm25_must_not,
+        "bm25_multimatch": q_bm25_multimatch,
+        "streaming_index": q_streaming_index,
+        "bm25_count": q_bm25_count,
+        "bm25_explain": q_bm25_explain,
+        "index_stats": q_index_stats,
+        "bm25_search_after": q_bm25_search_after,
+        "termvectors": q_termvectors,
+        "bm25_recency": q_bm25_recency,
+        "bm25_datehist": q_bm25_datehist,
+        "rank_eval": q_rank_eval,
+        "bm25_phrase_prefix": q_bm25_phrase_prefix,
+        "bm25_boosting": q_bm25_boosting,
+        "bm25_tophits": q_bm25_tophits,
+        "bm25_cardinality": q_bm25_cardinality,
+        "bm25_range": q_bm25_range,
+        "bm25_haschild": q_bm25_haschild,
+        "bm25_percentiles": q_bm25_percentiles,
+        "bm25_rescore": q_bm25_rescore,
+        "bm25_terms_set": q_bm25_terms_set,
+        "bm25_fvf": q_bm25_fvf,
+        "bm25_extstats": q_bm25_extstats,
+        "codes_csv_roundtrip": q_codes_csv_roundtrip,
+        "media_dir_scan": q_media_dir_scan,
+        "decontaminate": q_decontaminate,
+        "repetition": q_repetition,
+        "pii_redact": q_pii_redact,
+        "stratified_sample": q_stratified_sample,
+        "unigram_logprob": q_unigram_logprob,
+        "pack_sequences": q_pack_sequences,
+        "embedding_neardup": q_embedding_neardup,
+        "token_counts": q_token_counts,
+        "sample_hash": q_sample_hash,
+        "sessionize": q_sessionize,  # merged: plain + salted variants
+        "streaming_ingest": q_streaming_ingest,
+        "media_features": q_media_features,
+        "media_frames": q_media_frames,
+        # --- r05-certified entries whose engine path changed in r06 (the
+        # shared shard-cell kernel, the sloppy-phrase ANSI fix) ---
+        "bm25_phrase": q_bm25_phrase,  # + slop variant (r05)
+        "bm25_filtered": q_bm25_filtered,
+        "bm25_boosted": q_bm25_boosted,
+        "bm25_msm": q_bm25_msm,
+        "bm25_page": q_bm25_page,
+        "bm25_mining": q_bm25_mining,  # + allow-set lane (r05)
+        # merged: deleted/expunged/updated lifecycle in one slot
+        "bm25_deleted": q_bm25_deleted,
+        "bm25_analyzed": q_bm25_analyzed,  # NEW: analyzer-chain index
+        "bm25_dismax": q_bm25_dismax,
+        # ----- 50-entry window boundary (driver records nothing below) -----
+        # r05-certified entries (one round old — rotation-compliant)
         "bm25_histogram": q_bm25_histogram,
         "bm25_filters": q_bm25_filters,
         "analyze": q_analyze,
         "dedup_search": q_dedup_search,
         "bm25_context": q_bm25_context,
         "percolate": q_percolate,
-        # --- the 39 entries last certified r03 (owed this round; the r05
-        # window-surgery merges retired hamming_twostage,
-        # permuted_subcode_weights, map_by_k, doc_stats, and term_stats
-        # into their canonical union entries below — 44 owed became 39,
-        # freeing five slots for this round's changed/new code) ---
-        "bm25_filtered": q_bm25_filtered,
-        "bm25_dismax": q_bm25_dismax,
         "bm25_reindexed": q_bm25_reindexed,
         "significant_terms": q_significant_terms,
         "bm25_facets": q_bm25_facets,
@@ -4345,9 +4393,6 @@ def queries():
         # merged: doc/term/corpus scoring-statistics variants in one slot
         "corpus_stats": q_corpus_stats,
         "bm25_brute": q_bm25_brute,
-        "bm25_boosted": q_bm25_boosted,
-        "bm25_msm": q_bm25_msm,
-        "bm25_page": q_bm25_page,
         "bm25_fuzzy": q_bm25_fuzzy,
         "bm25_mlt": q_bm25_mlt,
         "bm25_highlight": q_bm25_highlight,
@@ -4358,61 +4403,6 @@ def queries():
         "pricing_summary": q_pricing_summary,
         "prefix_filter": q_prefix_filter,
         "events_hourly": q_events_hourly,
-        # --- code changed or added in r05: must re-certify this round
-        # (the five slots the owed-set merges freed) ---
-        "bm25_phrase": q_bm25_phrase,  # + slop variant (r05)
-        "bm25_analyzed": q_bm25_analyzed,  # NEW: analyzer-chain index
-        "bm25_mining": q_bm25_mining,  # + allow-set lane (r05)
-        # merged: deleted/expunged/updated lifecycle in one slot
-        "bm25_deleted": q_bm25_deleted,
         # merged: wildcard + regexp dictionary expansion in one slot
         "bm25_wildcard": q_bm25_wildcard,
-        # ----- 50-entry window boundary (driver records nothing below) -----
-        # r04-certified entries (one round old — rotation-compliant; the
-        # merges below retired bm25_regexp, bm25_expunged, bm25_updated,
-        # bm25_compacted, and cross_dup_ngrams from this set, so the r06
-        # window opens with free slots for r05 additions)
-        # merged: within + cross duplicated-n-gram variants in one slot
-        "dup_ngrams": q_dup_ngrams,
-        # merged: appended + compacted lifecycle in one slot
-        "bm25_appended": q_bm25_appended,
-        "bm25_querystring": q_bm25_querystring,
-        "bm25_must_not": q_bm25_must_not,
-        "bm25_multimatch": q_bm25_multimatch,
-        "streaming_index": q_streaming_index,
-        "bm25_count": q_bm25_count,
-        "bm25_explain": q_bm25_explain,
-        "index_stats": q_index_stats,
-        "bm25_search_after": q_bm25_search_after,
-        "termvectors": q_termvectors,
-        "bm25_recency": q_bm25_recency,
-        "bm25_datehist": q_bm25_datehist,
-        "rank_eval": q_rank_eval,
-        "bm25_phrase_prefix": q_bm25_phrase_prefix,
-        "bm25_boosting": q_bm25_boosting,
-        "bm25_tophits": q_bm25_tophits,
-        "bm25_cardinality": q_bm25_cardinality,
-        "bm25_range": q_bm25_range,
-        "bm25_haschild": q_bm25_haschild,
-        "bm25_percentiles": q_bm25_percentiles,
-        "bm25_rescore": q_bm25_rescore,
-        "bm25_terms_set": q_bm25_terms_set,
-        "bm25_fvf": q_bm25_fvf,
-        "bm25_twostage": q_bm25_twostage,  # merged: wand + wand_daat
-        "bm25_extstats": q_bm25_extstats,
-        "codes_csv_roundtrip": q_codes_csv_roundtrip,
-        "media_dir_scan": q_media_dir_scan,
-        "decontaminate": q_decontaminate,
-        "repetition": q_repetition,
-        "pii_redact": q_pii_redact,
-        "stratified_sample": q_stratified_sample,
-        "unigram_logprob": q_unigram_logprob,
-        "pack_sequences": q_pack_sequences,
-        "embedding_neardup": q_embedding_neardup,
-        "token_counts": q_token_counts,
-        "sample_hash": q_sample_hash,
-        "sessionize": q_sessionize,  # merged: plain + salted variants
-        "streaming_ingest": q_streaming_ingest,
-        "media_features": q_media_features,
-        "media_frames": q_media_frames,
     }

@@ -305,6 +305,31 @@ def test_exact_strategy_matches_wand(spark, t1_queries, idx_dir):
     ]
 
 
+def test_unknown_strategy_fails_at_the_call(spark, t1_queries, idx_dir):
+    """An unknown strategy — a typo, or the removed document-at-a-time
+    'wand_daat' — raises ValueError from the call itself, naming the valid
+    choices, for both serving entry points: no lazy DataFrame that fails
+    later inside a Python worker."""
+    mq = spark.createDataFrame([(1, "the value")], "qid long, text string")
+    for bad in ("bogus", "wand_daat"):
+        with pytest.raises(ValueError, match="'wand', 'exact'"):
+            query.search(spark, idx_dir, t1_queries, strategy=bad)
+        with pytest.raises(ValueError, match="'wand', 'exact'"):
+            query.search_mining(spark, idx_dir, mq, 5, strategy=bad)
+
+
+def test_default_driver_mem_fits_the_host():
+    """Without SPARK_DRIVER_MEM the driver heap is 24g capped at 60% of
+    physical memory, so a small host never gets a heap beyond its RAM."""
+    from elastichash_spark.session import _default_driver_mem
+
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mem = _default_driver_mem()
+    assert mem.endswith("m")
+    mib = int(mem[:-1])
+    assert 0 < mib <= 24 << 10 and mib << 20 <= 0.6 * phys
+
+
 def test_filtered_search_rank_identity(spark, t1, t1_queries, idx_dir):
     """ES filter-context semantics (``search(doc_filter=...)``, the bool
     filter clause wrapping the reference's function_score,
@@ -346,9 +371,6 @@ def test_filtered_search_rank_identity(spark, t1, t1_queries, idx_dir):
     assert [(r["qid"], r["rank"], r["docID"], r["score"]) for r in allf] == [
         (r["qid"], r["rank"], r["docID"], r["score"]) for r in base
     ]
-    with pytest.raises(ValueError):
-        query.search(spark, idx_dir, t1_queries, strategy="wand_daat",
-                     doc_filter="role = 'user'")
 
 
 def test_filtered_randomized_equivalence(spark, tmp_path):
@@ -551,6 +573,25 @@ def test_append_index_matches_full_oracle(spark, t1, t1_queries, tmp_path_factor
         (r["qid"], r["rank"], r["docID"], round(r["score"], 12)) for r in exa
     ]
     assert stats0["blocks_touched"] < stats0["blocks_total"]
+    # boost + min_should_match under the safe bounds: the drift-safe bound
+    # scales by the boosted weight, and every strategy (the staged block-max
+    # path included) stays identical to the full-corpus oracle
+    boosts = _auto_boosts(t1_queries.select("qid", "text", "k").collect())
+    ora_bm = oracle.oracle_topk(t1, t1_queries, boosts=boosts,
+                                min_should_match=2).collect()
+    assert ora_bm, "boosted msm=2 oracle empty — fixture too sparse to test"
+    legs = [
+        query.search(spark, d, t1_queries, strategy, boosts=boosts,
+                     min_should_match=2, **kw)
+        .orderBy("qid", "rank").collect()
+        for strategy, kw in (("wand", {}), ("wand", {"small_cutoff": 0}),
+                             ("exact", {}))
+    ]
+    for got in legs:
+        assert [(r["qid"], r["rank"], r["docID"], r["score"]) for r in got] == [
+            (r["qid"], r["rank"], r["docID"], r["score"]) for r in legs[-1]
+        ]
+        assert norm(got, key_by_id) == norm(ora_bm, key_by_id_o)
 
 
 def test_chunked_blob_batches_identical(spark, t1, idx_dir, tmp_path):
@@ -619,14 +660,13 @@ def test_randomized_pruning_equivalence(spark, tmp_path):
         # min_should_match sweep on the same corpus/queries: exact's
         # full-decode match counts are the in-engine reference; the staged
         # WAND (msm-restricted thresholds + zero-cross-bound block prune)
-        # and the cursor DAAT (aligned-count gate) must agree row-for-row
+        # must agree row-for-row in both small-term regimes
         msm = 2 if seed != 202 else 3
         e_m = (
             query.search(spark, d, queries, "exact", min_should_match=msm)
             .orderBy("qid", "rank").collect()
         )
-        for variant, kw in (("wand", {}), ("wand", {"small_cutoff": 0}),
-                            ("wand_daat", {})):
+        for variant, kw in (("wand", {}), ("wand", {"small_cutoff": 0})):
             w_m = (
                 query.search(spark, d, queries, variant,
                              min_should_match=msm, **kw)
@@ -1020,16 +1060,17 @@ def test_boosted_search_rank_identity(spark, t1, t1_queries, idx_dir):
     )
     want_ranks = [(r["qid"], r["rank"], r["docID"]) for r in ora]
     want_scores = np.array([r["score"] for r in ora])
-    for strategy in ("wand", "exact", "wand_daat"):
+    for strategy, kw in (("wand", {}), ("exact", {}),
+                         ("wand", {"small_cutoff": 0})):
         eng = (
             query.search(spark, idx_dir, t1_queries, strategy=strategy,
-                         boosts=boosts)
+                         boosts=boosts, **kw)
             .orderBy("qid", "rank")
             .collect()
         )
-        assert [(r["qid"], r["rank"], r["docID"]) for r in eng] == want_ranks, strategy
+        assert [(r["qid"], r["rank"], r["docID"]) for r in eng] == want_ranks, (strategy, kw)
         diffs = np.abs(np.array([r["score"] for r in eng]) - want_scores)
-        assert len(diffs) > 0 and diffs.max() < 1e-9, strategy
+        assert len(diffs) > 0 and diffs.max() < 1e-9, (strategy, kw)
     # boosts actually change the ranking (guard against a no-op pass)
     plain = query.search(spark, idx_dir, t1_queries, strategy="wand")
     plain_ranks = [
@@ -1074,8 +1115,7 @@ def test_min_should_match_rank_identity(spark, t1, t1_queries, idx_dir):
         want = [(r["qid"], r["rank"], r["docID"], round(r["score"], 9))
                 for r in ora]
         assert want, f"oracle empty at msm={msm} — fixture too sparse to test"
-        runs = [("wand", {}), ("exact", {}), ("wand_daat", {}),
-                ("wand", {"small_cutoff": 0})]
+        runs = [("wand", {}), ("exact", {}), ("wand", {"small_cutoff": 0})]
         for strategy, kw in runs:
             eng = (
                 query.search(spark, idx_dir, t1_queries, strategy=strategy,
@@ -1141,17 +1181,18 @@ def test_offset_pagination(spark, t1, t1_queries, idx_dir):
         .orderBy("qid", "rank").collect()
     )
     want = [(r["qid"], r["rank"], r["docID"], r["score"]) for r in base]
-    for strategy in ("wand", "exact", "wand_daat"):
+    for strategy, kw in (("wand", {}), ("exact", {}),
+                         ("wand", {"small_cutoff": 0})):
         pages = []
         for page in range(3):
             rows = query.search(
                 spark, idx_dir,
                 [(r["qid"], r["text"], p) for r in qdf.collect()],
-                strategy=strategy, offset=page * p,
+                strategy=strategy, offset=page * p, **kw,
             ).collect()
             pages.extend((r["qid"], r["rank"], r["docID"], r["score"])
                          for r in rows)
-        assert sorted(pages) == sorted(want), strategy
+        assert sorted(pages) == sorted(want), (strategy, kw)
     # composes with msm: page 2 of the msm-restricted ranking
     multi = [r for r in t1_queries.collect()
              if len(set(r["text"].split())) >= 3][:2]
@@ -2224,7 +2265,7 @@ def test_delete_by_query_soft_delete_semantics(spark, t1, idx_dir, tmp_path):
     immediately while SURVIVORS keep their exact pre-delete scores (Lucene
     live-docs: statistics count deleted docs until merge); reruns are
     idempotent; expunge rebuilds without them and recomputes statistics;
-    the mining grid and wand_daat refuse tombstoned indexes loudly."""
+    the mining grid serves tombstoned indexes through the allow-set lane."""
     import shutil
 
     from elastichash_spark import deletes
@@ -2269,8 +2310,6 @@ def test_delete_by_query_soft_delete_semantics(spark, t1, idx_dir, tmp_path):
         spark.createDataFrame([(1, "the")], "qid long, text string"),
         5).collect()
     assert mrows and not victims & {r["docID"] for r in mrows}
-    with pytest.raises(ValueError, match="wand_daat"):
-        query.search(spark, idx, q, strategy="wand_daat")
 
     # expunge: physical rebuild equals a fresh index over the live corpus
     xdir = str(tmp_path / "expunged")
